@@ -217,7 +217,7 @@ object Bench {
   // (SPARK_GRAFT_BENCH_ONLY) never write the ledger: their totals aren't
   // comparable to a full pass.
   def ledgerPath: String = sys.env.getOrElse("SPARK_GRAFT_BENCH_LEDGER",
-    "/root/repo/.bench_ledger.json")
+    new java.io.File(".bench_ledger.json").getAbsolutePath)
   def writeLedger(entry: String): Unit =
     try java.nio.file.Files.write(java.nio.file.Paths.get(ledgerPath),
       (entry + "\n").getBytes("UTF-8"))
@@ -234,17 +234,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.get("ERROR")
 
     def runOnce(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)

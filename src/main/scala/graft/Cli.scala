@@ -17,8 +17,7 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Cli <task|replication|pipeline|discover> ...")
-    val spark = GraftSession.get()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.get("ERROR")
     try run(spark, args.toSeq)
     finally spark.stop()
   }

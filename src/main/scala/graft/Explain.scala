@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan review utility: prints the formatted physical plan of the given
   * queries (default: the Bench headline set) so pushdown, pruning, broadcast
   * choice, and codegen spans can be audited per round.
@@ -19,13 +17,8 @@ object Explain {
     // ReusedExchange visible so reuse claims can be audited statically.
     val aqe = if (sys.env.contains("SPARK_GRAFT_EXPLAIN_NOAQE")) "false"
       else "true"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder()
       .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>

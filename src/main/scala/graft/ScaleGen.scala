@@ -61,15 +61,7 @@ object ScaleGen {
     require(replicas <= vowelish.length,
       s"replicas=$replicas > ${vowelish.length}: vowel rotation would repeat " +
         "and plant cross-replica duplicate documents")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.get("ERROR")
 
     def tbl(name: String): DataFrame = Tables(spark, srcDir, name)
 

@@ -151,7 +151,7 @@ object ApiSpec {
         }
       }
       // state mutation stays on the driver thread, after the level's barrier
-      Await.result(Future.sequence(futures), 10.minutes).foreach {
+      Await.result(Future.sequence(futures), Duration.Inf).foreach {
         case (ep, recs) =>
           out(ep.spec.name) = recs
           applyProcessors(recs, ep.processors, state)

@@ -167,11 +167,14 @@ object Replication {
     import java.util.concurrent.{Executors, TimeUnit}
     import scala.concurrent._
     import scala.concurrent.duration._
-    val pool = Executors.newFixedThreadPool(threads)
+    val pool = Executors.newFixedThreadPool(threads,
+      (r: Runnable) => new Thread(r, PoolThreadName))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val state = scala.collection.concurrent.TrieMap[String, Any]()
     val out = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
-    topoLevels(compiled.streams).foreach { level =>
+    // a failed stream rethrows from Await below; the pool must still shut
+    // down, or its non-daemon threads keep the JVM alive
+    try topoLevels(compiled.streams).foreach { level =>
       val futures = level.map { st =>
         Future {
           // per-stream select/where/transforms run through the same pipeline
@@ -235,8 +238,10 @@ object Replication {
           (st, tgt.read.count())
         }
       }
-      // state publication stays on the driver thread, after the level barrier
-      Await.result(Future.sequence(futures), 10.minutes).foreach {
+      // state publication stays on the driver thread, after the level
+      // barrier. No time cap here: one large stream may legitimately take
+      // longer than any fixed per-level bound.
+      Await.result(Future.sequence(futures), Duration.Inf).foreach {
         case (st, rows) =>
           state(s"${st.name}.rows") = rows
           st.updateKey.foreach { k =>
@@ -252,7 +257,10 @@ object Replication {
           out += ((st.name, st.mode, rows))
       }
     }
-    pool.shutdown(); pool.awaitTermination(1, TimeUnit.SECONDS)
+    finally { pool.shutdown(); pool.awaitTermination(1, TimeUnit.SECONDS) }
     out.toSeq.sortBy(_._1)
   }
+
+  /** Name of [[run]]'s stream-pool threads. */
+  val PoolThreadName = "graft-replication"
 }

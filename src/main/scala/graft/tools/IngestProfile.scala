@@ -1,19 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic: stage-by-stage timing of the CSV ingest path, to attribute
   * bench_ingest_csv's cost (parse vs inference-cast vs staged write) and
   * validate the narrow-scan widening fix. Not part of the product surface.
   */
 object IngestProfile {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.get("ERROR")
     val csvDir = args.headOption.getOrElse("/tmp/graft-bench-ingest/lineitem_csv")
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.Auth
@@ -9,14 +8,7 @@ import graft.sources.Athena
 /** Athena JSON-RPC lifecycle over a loopback endpoint: SigV4 signatures
   * recomputed and verified server-side, QUEUED→RUNNING→SUCCEEDED
   * polling, header-row drop, NextToken paging, and failure surfacing. */
-class AthenaSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AthenaSpec extends AnyFunSuite with SparkSuite {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 

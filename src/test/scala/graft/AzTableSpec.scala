@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.AzTable
@@ -9,13 +8,7 @@ import graft.sources.AzTable
   * listing with continuation paging, incremental/backfill filters,
   * SharedKeyLite signatures verified server-side, and entity inserts.
   */
-class AzTableSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AzTableSpec extends AnyFunSuite with SparkSuite {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,14 +13,7 @@ import graft.write.ParquetTarget
   * (batch_limit / batch_max_duration, config.go:1737-1738) routed into
   * Structured Streaming foreachBatch applies.
   */
-class BoundedCdcSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BoundedCdcSpec extends AnyFunSuite with SparkSuite {
 
   private def freshDir(name: String): String = {
     val p = s"/tmp/graft-test/$name"

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Bpe
@@ -8,13 +7,7 @@ import graft.functions.Bpe
 /** Byte-level BPE: lossless roundtrip, planted merge-chain arithmetic,
   * deterministic learning, and the distributed counting operator.
   */
-class BpeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeSpec extends AnyFunSuite with SparkSuite {
 
   private val demo = Bpe.Vocab(Seq(("a", "a"), ("aa", "aa"), ("b", "c")))
 

@@ -7,7 +7,7 @@ import graft.write.BulkStage
 /** Golden renders for the staged bulk-load statements (Snowflake PUT/COPY
   * INTO, BigQuery load job) — offline-testable exactly like NativeTypes.
   */
-class BulkStageSpec extends AnyFunSuite {
+class BulkStageSpec extends AnyFunSuite with SparkSuite {
 
   test("snowflake PUT: parallel upload, no recompression of staged parts") {
     assert(BulkStage.snowflakePut("file:///tmp/part-0001.parquet",
@@ -91,8 +91,6 @@ class BulkStageSpec extends AnyFunSuite {
   }
 
   test("bcp distributed encode matches the scalar encoder") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
     val vals = Seq("a,b", "q\"x", "line1\nline2", "cr\rhere", "", "plain", null)
     val out = vals.toDF("s")

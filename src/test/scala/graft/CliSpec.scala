@@ -1,16 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** CLI verb routing over the library modules. */
-class CliSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CliSpec extends AnyFunSuite with SparkSuite {
 
   private def tempFile(content: String, suffix: String): String = {
     val f = java.io.File.createTempFile("cli", suffix)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Dedup
@@ -9,13 +8,7 @@ import graft.functions.Dedup
   * adversarial shapes AND the O(log) round bound that motivated replacing
   * min-label propagation (a k-chain needed k rounds there).
   */
-class ConnectedComponentsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ConnectedComponentsSpec extends AnyFunSuite with SparkSuite {
 
   /** Driver-side union-find ground truth. */
   private def truth(n: Seq[Long], es: Seq[(Long, Long)]): Map[Long, Long] = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{Cql, LoopbackCql}
@@ -11,14 +10,7 @@ import Cql._
   * server, token-range partitioned reads, and upsert-by-PK inserts
   * (database_scylladb.go semantics, Spark-first fan-out).
   */
-class CqlSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CqlSpec extends AnyFunSuite with SparkSuite {
 
   test("value codec round-trips every scalar type") {
     def rt(v: Any, t: CqlType): Any = Cql.decodeValue(Cql.encodeValue(v, t), t)

@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.D1
 
 /** Cloudflare D1 over a loopback /raw endpoint: columnar response
   * re-keying, bearer auth, SQL error surfaces. */
-class D1Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class D1Spec extends AnyFunSuite with SparkSuite {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 

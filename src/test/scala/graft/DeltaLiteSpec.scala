@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.DeltaLite
 
 /** Delta transaction-log replay + single-writer commits (protocol v1). */
-class DeltaLiteSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DeltaLiteSpec extends AnyFunSuite with SparkSuite {
 
   private def freshDir(name: String): String = {
     val p = s"/tmp/graft-test/$name"

@@ -2,7 +2,6 @@ package graft
 
 import java.sql.DriverManager
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,14 +17,7 @@ import graft.write.DialectSql.MergeSpec
   * Spark JDBC staging write + in-DB merge + distributed read-back —
   * so the duckdb/motherduck/ducklake dialect family graduates from
   * render-only to executed. */
-class DuckdbExecSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("duckdb-spec").getOrCreate()
+class DuckdbExecSpec extends AnyFunSuite with SparkSuite {
 
   private val schema = StructType(Seq(
     StructField("k", LongType, nullable = false),

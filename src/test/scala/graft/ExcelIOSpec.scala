@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.ExcelIO
 
 /** XLSX zip/OOXML round-trip, ranges, shared strings. */
-class ExcelIOSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExcelIOSpec extends AnyFunSuite with SparkSuite {
 
   test("A1 addressing helpers") {
     assert(ExcelIO.colIndex("A1") == 0)

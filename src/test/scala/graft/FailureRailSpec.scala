@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +11,7 @@ import graft.write.ParquetTarget
   * final swap, :313-331 temp cleanup): a fault ANYWHERE in the staged path
   * must leave the final table untouched and no temp objects behind.
   */
-class FailureRailSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FailureRailSpec extends AnyFunSuite with SparkSuite {
 
   private def url(name: String) = s"jdbc:derby:memory:$name;create=true"
 

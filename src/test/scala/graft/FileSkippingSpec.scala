@@ -2,7 +2,6 @@ package graft
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{DeltaLite, FileSkipping, IcebergLite}
@@ -10,13 +9,7 @@ import graft.sources.FileSkipping.{ColStats, FileStats}
 
 /** Stats-based file skipping: predicate translation, the conservative
   * may-contain evaluator, and the Delta end-to-end pruned read. */
-class FileSkippingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FileSkippingSpec extends AnyFunSuite with SparkSuite {
 
   private def freshDir(name: String): String = {
     val p = s"/tmp/graft-test/$name"

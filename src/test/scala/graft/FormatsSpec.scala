@@ -2,21 +2,14 @@ package graft
 
 import java.sql.{Date, Timestamp}
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{ArrowIO, AvroIO}
 
 /** Avro / Arrow IPC round-trips: schema mapping, nulls, logical types. */
-class FormatsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FormatsSpec extends AnyFunSuite with SparkSuite {
 
   private val schema = StructType(Seq(
     StructField("id", LongType),

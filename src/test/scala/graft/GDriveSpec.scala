@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{FileBackends, GDrive}
@@ -9,13 +8,7 @@ import graft.sources.{FileBackends, GDrive}
   * resolution through folder parents, listing, binary download, multipart
   * upload, and the fetch-to-staging RemoteTransport integration.
   */
-class GDriveSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GDriveSpec extends AnyFunSuite with SparkSuite {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 

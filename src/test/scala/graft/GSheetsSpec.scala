@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.GSheets
@@ -10,14 +9,7 @@ import graft.sources.GSheets
   * chunked writes, and the service-account JWT-bearer token flow with a
   * real RS256 signature verified server-side.
   */
-class GSheetsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GSheetsSpec extends AnyFunSuite with SparkSuite {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 

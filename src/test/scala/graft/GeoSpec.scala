@@ -2,20 +2,13 @@ package graft
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Geo
 import graft.write.GeoJsonWriter
 
 /** WKB/EWKB → GeoJSON semantics (reference datastream.go:2526-2573). */
-class GeoSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GeoSpec extends AnyFunSuite with SparkSuite {
 
   test("point wkb roundtrip, little endian") {
     assert(Geo.wkbToGeoJson(Geo.pointWkb(-56.5, 23.5)) ==

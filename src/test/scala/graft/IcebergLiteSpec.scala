@@ -5,19 +5,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.IcebergLite
 
 /** Iceberg metadata walk against a spec-shaped fixture table. */
-class IcebergLiteSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IcebergLiteSpec extends AnyFunSuite with SparkSuite {
 
   private val manifestEntrySchema = new Schema.Parser().parse(
     """{"type":"record","name":"manifest_entry","fields":[
@@ -137,23 +130,24 @@ class IcebergLiteSpec extends AnyFunSuite {
     // iceberg `time` = micros since midnight → Spark 4.1 TIME(6); `uuid`
     // reads as string (Spark has no UUID type; reference issue cli id=250).
     // TIME is feature-flagged in Spark 4.1 — enable it for this scope
-    spark.conf.set("spark.sql.timeType.enabled", "true")
-    val t = "/tmp/graft-test/iceberg_time_uuid"
-    val df = spark.sql(
-      """select id,
-        |  cast(concat('12:30:0', id) as time(6)) as t_of_day,
-        |  uuid() as u from range(5)""".stripMargin)
-      .select("id", "t_of_day", "u")
-    IcebergLite.writeSnapshot(df, t,
-      fieldIds = Some(Seq((1, "id"), (2, "t_of_day"), (3, "u"))))
-    val back = IcebergLite.read(spark, t)
-    assert(back.schema("t_of_day").dataType ==
-      org.apache.spark.sql.types.TimeType(6))
-    val got = back.orderBy("id").collect()
-    assert(got.length == 5)
-    assert(got(2).get(1).toString == "12:30:02")
-    assert(got.forall(_.getString(2).matches(
-      "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")))
+    withConf("spark.sql.timeType.enabled" -> "true") {
+      val t = "/tmp/graft-test/iceberg_time_uuid"
+      val df = spark.sql(
+        """select id,
+          |  cast(concat('12:30:0', id) as time(6)) as t_of_day,
+          |  uuid() as u from range(5)""".stripMargin)
+        .select("id", "t_of_day", "u")
+      IcebergLite.writeSnapshot(df, t,
+        fieldIds = Some(Seq((1, "id"), (2, "t_of_day"), (3, "u"))))
+      val back = IcebergLite.read(spark, t)
+      assert(back.schema("t_of_day").dataType ==
+        org.apache.spark.sql.types.TimeType(6))
+      val got = back.orderBy("id").collect()
+      assert(got.length == 5)
+      assert(got(2).get(1).toString == "12:30:02")
+      assert(got.forall(_.getString(2).matches(
+        "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")))
+    }
   }
 
   test("v2 delete snapshot: position and equality deletes apply on read") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +14,7 @@ import graft.functions.expressions.{ArrayFold, GramBuckets, TextGrams}
   * guide §4); any semantic divergence is a correctness bug, and these
   * tests are the local gate ahead of the DuckDB oracle.
   */
-class KernelEquivalenceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class KernelEquivalenceSpec extends AnyFunSuite with SparkSuite {
 
   private def texts: DataFrame = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.LangIdNgram
@@ -8,13 +7,7 @@ import graft.functions.LangIdNgram
 /** Cavnar–Trenkle character-n-gram language ID: planted multilingual
   * recovery, short-doc null, deterministic tie-break.
   */
-class LangIdNgramSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LangIdNgramSpec extends AnyFunSuite with SparkSuite {
 
   private def labeled = {
     import spark.implicits._

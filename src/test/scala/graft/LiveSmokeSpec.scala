@@ -32,7 +32,7 @@ object LiveSmoke extends Tag("graft.LiveSmoke")
   * dialect's default merge where the engine speaks SQL, and drops the
   * object in a finally — safe to point at a shared dev server.
   */
-class LiveSmokeSpec extends AnyFunSuite {
+class LiveSmokeSpec extends AnyFunSuite with SparkSuite {
 
   private def live(name: String): Option[String] =
     sys.env.get(name).filter(_.nonEmpty)
@@ -49,12 +49,6 @@ class LiveSmokeSpec extends AnyFunSuite {
 
   private def dbOf(u: java.net.URI, dflt: String): String =
     Option(u.getPath).map(_.stripPrefix("/")).filter(_.nonEmpty).getOrElse(dflt)
-
-  lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** k 1..5 original; the merge stage carries k 3..7 upper-cased. */
   private def baseDf = {

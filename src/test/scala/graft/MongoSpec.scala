@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{Bson, LoopbackMongo, Mongo}
@@ -10,13 +9,7 @@ import Bson.{BDoc, ObjectId}
   * the loopback server, `_id`-range partitioned distributed reads, and
   * the reference's filter grammar (database_mongo.go:316-483).
   */
-class MongoSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MongoSpec extends AnyFunSuite with SparkSuite {
 
   private def oid(n: Int): ObjectId = ObjectId.fromBigInt(BigInt(n) + 0x1000)
 

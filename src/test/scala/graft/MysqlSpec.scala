@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,14 +11,7 @@ import graft.write.MyLoadData
   * text-resultset decode typed from ColumnDefinition41, partitioned
   * range reads, and the executed LOAD DATA LOCAL INFILE bulk path
   * (database_mysql.go:543-613 LoadDataLocal semantics). */
-class MysqlSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("mysql-spec").getOrCreate()
+class MysqlSpec extends AnyFunSuite with SparkSuite {
 
   private def withServer[A](plugin: String = "caching_sha2_password")
       (f: (LoopbackMysql, Mysql.Conn) => A): A = {

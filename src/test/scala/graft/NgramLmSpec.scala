@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +8,7 @@ import graft.functions.NgramLm
 /** Stupid-Backoff bigram LM: hand-computed log-probs on a planted
   * corpus, backoff tiers, short-doc null, bucket cut points.
   */
-class NgramLmSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class NgramLmSpec extends AnyFunSuite with SparkSuite {
 
   test("score hits all three backoff tiers with hand-computed micro values") {
     import spark.implicits._

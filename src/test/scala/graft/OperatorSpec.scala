@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,14 +13,7 @@ import graft.write.{ChangeCapture, Modes, ParquetTarget}
 /** Operator-level correctness tests on crafted micro-data (the DuckDB oracle
   * covers the full-table scenarios; these pin the edge semantics).
   */
-class OperatorSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OperatorSpec extends AnyFunSuite with SparkSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
@@ -629,6 +621,23 @@ class OperatorSpec extends AnyFunSuite {
     graft.repl.Replication.run(spark, "/root/testdata/sf0.001", compiled, dir)
     assert(spark.read.parquet(s"$dir/nation").schema("n_nationkey").dataType ==
       org.apache.spark.sql.types.DecimalType(12, 3))
+  }
+
+  test("a failed replication stream rethrows its error and stops the pool") {
+    import scala.jdk.CollectionConverters._
+    import graft.repl.Replication
+    val compiled = Replication.parse(
+      "streams:\n  no_such_table:\n    mode: full-refresh\n", Seq("no_such_table"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_repl_fail").toString
+    val e = intercept[Exception] {
+      Replication.run(spark, dir, compiled, dir)
+    }
+    assert(e.getMessage.contains("no_such_table"), e)
+    def poolThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName == Replication.PoolThreadName)
+    val deadline = System.nanoTime() + 5e9.toLong
+    while (poolThreads.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(poolThreads.isEmpty, poolThreads.map(_.getName))
   }
 
   test("upsertEvolve adjustTypes widens a changed column on both sides") {

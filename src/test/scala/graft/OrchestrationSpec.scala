@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.Queue
@@ -8,13 +7,7 @@ import graft.repl.Hooks
 import graft.sources.FileSources
 
 /** Hook executor, queue FIFO, and stdin source semantics. */
-class OrchestrationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OrchestrationSpec extends AnyFunSuite with SparkSuite {
 
   test("command hook captures output; non-zero exit honors on_failure") {
     val ok = Hooks.run(spark, Seq(Hooks.Hook("command", "echo hi")))

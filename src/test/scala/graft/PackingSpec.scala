@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,23 +9,16 @@ import graft.functions.Packing
   * exactness vs a sequential scan, null handling, boundary-crossing
   * sequence indices, and the no-single-task-window scale shape.
   */
-class PackingSpec extends AnyFunSuite {
+class PackingSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override def withFixture(test: NoArgTest) =
+    withConf("spark.sql.shuffle.partitions" -> "8")(super.withFixture(test))
 
   /** AQE coalesces tiny range shuffles to one partition, which would let
     * the cross-partition offset path go untested on micro-data — pin it
     * off for the duration of `body`. */
-  private def withoutCoalesce[T](body: => T): T = {
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try body finally spark.conf.set(key, prev)
-  }
+  private def withoutCoalesce[T](body: => T): T =
+    withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false")(body)
 
   test("prefixSum matches a sequential scan across many partitions") {
     import spark.implicits._

@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +11,7 @@ import graft.write.PgCopy
 /** PG COPY text-format encoder: golden lines, escape/decode round-trip,
   * and the partition-streamed bulkLoad seam (database_postgres.go:380-480).
   */
-class PgCopySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PgCopySpec extends AnyFunSuite with SparkSuite {
 
   private val schema = StructType(Seq(
     StructField("id", LongType),

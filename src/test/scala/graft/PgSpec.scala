@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,14 +10,7 @@ import graft.sources.{LoopbackPg, Pg}
   * decode typed from RowDescription OIDs, partitioned range reads, and
   * the executed COPY FROM STDIN bulk path through the PgCopy transport
   * seam (database_postgres.go:380-480 BulkImportStream semantics). */
-class PgSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("pg-spec").getOrCreate()
+class PgSpec extends AnyFunSuite with SparkSuite {
 
   private def withServer[A](auth: String = "scram-sha-256")
       (f: (LoopbackPg, Pg.Conn) => A): A = {

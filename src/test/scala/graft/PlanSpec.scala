@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,17 +9,14 @@ import graft.sources.Tables
 /** Physical-plan assertions: the properties that matter at 100 TB
   * (pushdown, bucketed shuffle elimination, codegen containment).
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // plans are asserted without size-based broadcast joins unless a test
+  // opts in; scoped per test so the shared session does not keep it
+  override def withFixture(test: NoArgTest) =
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      super.withFixture(test)
+    }
 
   private def formatted(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
@@ -57,8 +53,8 @@ class PlanSpec extends AnyFunSuite {
   test("bucketed join reads bucketed scans without a join-side shuffle") {
     import org.apache.spark.sql.functions._
     val o = Tables(spark, "/root/testdata/sf0.001", "orders")
-    // suites share one session via getOrCreate, so the warehouse dir may
-    // hold last run's table dirs the in-memory catalog doesn't know about
+    // the warehouse dir outlives the session, so it may hold last run's
+    // table dirs the in-memory catalog doesn't know about
     Seq("plan_o", "plan_o2").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
       val loc = new org.apache.hadoop.fs.Path(
@@ -68,13 +64,9 @@ class PlanSpec extends AnyFunSuite {
     }
     o.write.mode("overwrite").bucketBy(4, "o_orderkey").saveAsTable("plan_o")
     o.write.mode("overwrite").bucketBy(4, "o_orderkey").saveAsTable("plan_o2")
-    // force a non-broadcast join so the bucketed sort-merge path is planned
-    // (runtime conf: the session is shared across suites)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // the fixture's no-broadcast conf plans the bucketed sort-merge path
     val j = spark.table("plan_o").join(spark.table("plan_o2"), "o_orderkey")
     val plan = formatted(j)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert(plan.contains("Bucketed: true"), plan)
     assert(!plan.contains("Exchange"), s"join over co-bucketed tables must not shuffle:\n$plan")
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Prometheus
@@ -10,13 +9,7 @@ import graft.sources.Prometheus
   * to label+ts+value rows, and the time-chunked distributed read (no
   * double-counted samples across chunk boundaries).
   */
-class PrometheusSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PrometheusSpec extends AnyFunSuite with SparkSuite {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.repl.{Connections, ProtocolRoute, TaskConfig}
@@ -11,13 +10,7 @@ import graft.repl.{Connections, ProtocolRoute, TaskConfig}
   * without the endpoint keep their JDBC path (connection.go type routing;
   * database_clickhouse.go / database_d1.go native surfaces).
   */
-class ProtocolRouteSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ProtocolRouteSpec extends AnyFunSuite with SparkSuite {
 
   private def spec(kind: String, props: (String, String)*) =
     Connections.ConnSpec("T", kind, props.toMap)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.QualityModel
@@ -8,13 +7,7 @@ import graft.functions.QualityModel
 /** Hashed-linear quality gate: planted separable corpus, deterministic
   * fit, exact integer threshold semantics.
   */
-class QualityModelSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QualityModelSpec extends AnyFunSuite with SparkSuite {
 
   private def fixtures = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +8,7 @@ import graft.functions.Sampling
 /** Deterministic md5-threshold sampling: threshold encoding edges, nested
   * samples, exhaustive-and-exclusive split bands, and cross-run stability.
   */
-class SamplingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SamplingSpec extends AnyFunSuite with SparkSuite {
 
   test("hexThreshold encodes rates as fixed-width comparable hex") {
     assert(Sampling.hexThreshold(0.0) == "00000000")

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,14 +11,7 @@ import graft.sources.SasIO
 
 /** SAS7BDAT binary source: layout goldens, RLE codec properties, truncated
   * numerics, and full write→read roundtrips in every supported layout. */
-class SasIOSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SasIOSpec extends AnyFunSuite with SparkSuite {
 
   private def sampleDf = {
     import spark.implicits._

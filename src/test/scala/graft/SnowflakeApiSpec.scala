@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.SnowflakeApi
@@ -8,14 +7,7 @@ import graft.sources.SnowflakeApi
 /** Snowflake SQL API v2 over a loopback endpoint: keypair JWT (signature
   * verified server-side against the derived public key), async 202
   * polling, and executor-parallel result-partition fetches. */
-class SnowflakeApiSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SnowflakeApiSpec extends AnyFunSuite with SparkSuite {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 

@@ -7,13 +7,7 @@ import graft.sources.Spill
 /** Cluster-safety of the REST spill stage: root resolution (explicit >
   * session conf > local-only temp), the non-local refusal, Hadoop-FS
   * part writing under a shared root, and eager purge. */
-class SpillSpec extends AnyFunSuite {
-
-  lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SpillSpec extends AnyFunSuite with SparkSuite {
 
   test("resolveRoot: explicit dir wins, then conf, then local temp") {
     assert(Spill.resolveRoot("local[4]", Some("/conf/root"),

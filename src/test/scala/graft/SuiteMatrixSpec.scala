@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.repl.SuiteMatrix
@@ -9,16 +8,7 @@ import graft.repl.SuiteMatrix
   * scenario suites (tests/suite.file.template.yaml + suite.db.template.yaml
   * + suite.cli.yaml) run end-to-end against the reference's own fixtures.
   */
-class SuiteMatrixSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    // the reference's parquet fixtures carry TIMESTAMP(NANOS) — same conf
-    // the engine sessions (GraftSession/Verify/Bench) pin
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SuiteMatrixSpec extends AnyFunSuite with SparkSuite {
 
   test("suite matrix: every ported scenario passes its validations") {
     val results = SuiteMatrix.runSuite(spark, SuiteMatrix.resourceSuite(),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,14 +12,7 @@ import graft.sources.Tds.{ColMeta, T}
   * reads, and the executed INSERT BULK + BulkLoadBCP path — the wire
   * flow behind the bcp binary the reference shells out to
   * (database_sqlserver.go:655-780). */
-class TdsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("tds-spec").getOrCreate()
+class TdsSpec extends AnyFunSuite with SparkSuite {
 
   private def withServer[A](f: (LoopbackTds, Tds.Conn) => A): A = {
     val srv = new LoopbackTds()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Trino
@@ -8,14 +7,7 @@ import graft.sources.Trino
 /** Trino client-protocol source over a loopback coordinator: statement
   * POST, nextUri paging, typed columns, and protocol error surfaces.
   */
-class TrinoSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TrinoSpec extends AnyFunSuite with SparkSuite {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +8,7 @@ import graft.functions.Urls
 /** URL normalization rules + dedup grouping (RefinedWeb-style URL-level
   * dedup — the stage crawl pipelines run before text dedup).
   */
-class UrlsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class UrlsSpec extends AnyFunSuite with SparkSuite {
 
   private def norm(urls: (String, String)*): Unit = {
     import spark.implicits._
